@@ -16,7 +16,7 @@ tuning thresholds, quadratic only within shingle-sharing groups.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beam_pyspark_runner_spark.functions.hashing import (
@@ -26,6 +26,7 @@ from beam_pyspark_runner_spark.functions.hashing import (
     h32_sql,
 )
 from beam_pyspark_runner_spark.plans.audit import checkpoint_audited
+from beam_pyspark_runner_spark.plans.fixpoint import fixpoint
 from beam_pyspark_runner_spark.queries.registry import register
 from beam_pyspark_runner_spark.sources.readers import load_table, spread
 
@@ -275,11 +276,12 @@ def connected_components(
     ``(id, comp)`` labels.
 
     Each iteration is one join + one partial agg, all executor-side; the
-    driver sees only a scalar convergence metric (sum of labels, strictly
-    decreasing until fixpoint). Lineage is truncated every round so plan
-    depth stays O(1). Rounds needed = graph diameter — for near-dup
-    clusters a small constant; at 100 TB each round is a shuffle of
-    (doc_id, label) pairs only, never document payloads.
+    driver sees only the scalar convergence metric observed on the
+    round's pin (sum of labels, strictly decreasing until fixpoint).
+    Lineage is truncated every round so plan depth stays O(1). Rounds
+    needed = graph diameter — for near-dup clusters a small constant; at
+    100 TB each round is a shuffle of (doc_id, label) pairs only, never
+    document payloads.
 
     ``reliable_checkpoint_dir``: when set, rounds checkpoint to that
     (HDFS/S3) path via ``checkpoint()`` and survive executor loss —
@@ -287,53 +289,36 @@ def connected_components(
     1000-node cluster over a long job is an expected event, not an edge
     case. Local default keeps the test path allocation-free.
 
-    ``max_iterations`` bounds the loop: propagation must converge within
-    graph-diameter rounds, so hitting the cap means the input is not
-    actually symmetric (or labels oscillate due to a non-deterministic
-    edge source) — fail loudly instead of looping forever.
+    ``max_iterations`` is a safety cap: propagation converges within
+    graph-diameter rounds, so reaching it means the input is not
+    symmetric (or labels oscillate under a non-deterministic edge
+    source) — it raises instead of looping forever.
     """
-    if reliable_checkpoint_dir is not None:
+    reliable = reliable_checkpoint_dir is not None
+    if reliable:
         sym.sparkSession.sparkContext.setCheckpointDir(reliable_checkpoint_dir)
+    sym = checkpoint_audited(sym, reliable=reliable)
 
-    def _pin(df: DataFrame) -> DataFrame:
-        return checkpoint_audited(
-            df, reliable=reliable_checkpoint_dir is not None
-        )
-
-    sym = _pin(sym)
-    labels = _pin(
-        sym.select("src").distinct().select(F.col("src").alias("id"), F.col("src").alias("comp"))
-    )
-    prev_total = None
-    for _ in range(max_iterations):
+    def step(labels, rnd):
         nbr = (
             sym.join(labels, sym.dst == labels.id)
             .groupBy("src")
             .agg(F.min("comp").alias("nbr_comp"))
         )
-        # Convergence metric fused onto the checkpoint's own
-        # materialization job via Observation (round-14; the graph.py
-        # _ckpt_observed pattern from round 13): the separate
-        # labels.agg(sum).first() probe cost one extra driver job per
-        # round. Sum of labels is a grouping-free, order-insensitive
-        # integer aggregate — exactly the observe contract — and is
-        # computed over the same rows the old post-pin agg saw.
-        obs = Observation()
-        labels = _pin(
-            labels.join(nbr, labels.id == nbr.src, "left")
-            .select(
-                "id",
-                F.least(F.col("comp"), F.coalesce("nbr_comp", "comp")).alias("comp"),
-            )
-            .observe(obs, F.sum("comp").alias("total"))
+        return labels.join(nbr, labels.id == nbr.src, "left").select(
+            "id", F.least(F.col("comp"), F.coalesce("nbr_comp", "comp")).alias("comp")
         )
-        total = obs.get["total"]
-        if total == prev_total:
-            return labels
-        prev_total = total
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} rounds; "
-        "input edge list is likely not symmetric"
+
+    return fixpoint(
+        "connected_components",
+        checkpoint_audited(
+            sym.select("src").distinct().select(F.col("src").alias("id"), F.col("src").alias("comp")),
+            reliable=reliable,
+        ),
+        step,
+        total="comp",
+        cap=max_iterations,
+        reliable=reliable,
     )
 
 

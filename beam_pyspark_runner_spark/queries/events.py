@@ -15,6 +15,7 @@ from pyspark.sql import Window as W
 from beam_pyspark_runner_spark.functions.numeric import davg, davg_sql, dsum, dsum_sql
 from beam_pyspark_runner_spark.plans.audit import checkpoint_audited
 from beam_pyspark_runner_spark.queries.registry import register
+from beam_pyspark_runner_spark.session import scoped_conf
 from beam_pyspark_runner_spark.sources.readers import load_table
 
 # 30-minute inactivity gap used by both session queries and the oracle.
@@ -3224,21 +3225,11 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = variants.select(
         "variant", F.lit("start").alias("state"), F.lit(1.0).alias("r")
     )
-    # The iteration shuffles ≤25-row vectors: at the session default of
-    # 32 shuffle partitions each pinned step schedules 32 near-empty
-    # tasks × 6 steps. Narrow the tiny stages to 1 partition for the
-    # loop's duration — the corpus-sized pair count was already
-    # materialized into tv above, under the session default. (Measured
-    # at sf0.1: 11.7 s unpinned → 6.5 s with tv+step pinning and
-    # 1-partition tiny stages; the 2.5 s floor is the corpus window.)
-    shuffle_key = "spark.sql.shuffle.partitions"
-    saved_parts = spark.conf.get(shuffle_key)
-    spark.conf.set(shuffle_key, "1")
+    # The iteration shuffles ≤25-row vectors: narrow its tiny stages to
+    # 1 partition for the loop's duration — the corpus-sized pair count
+    # was already materialized into tv above, under the session width.
     absorbed = []
-    # localCheckpoint is eager, so a mid-loop job failure would
-    # otherwise leave the SHARED session at 1 shuffle partition —
-    # always restore.
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "1"}):
         for _ in range(MARKOV_STEPS):
             contrib = v.alias("v").join(
                 F.broadcast(tv.alias("t")),
@@ -3252,8 +3243,7 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Pin each step's ≤25-row vector too: the absorbed-mass
             # legs union one slice per step, and without
             # materialization step k's lineage re-executes steps
-            # 1..k-1 (quadratic tiny-stage count — the 10 s was ~21
-            # re-run shuffle stages, not data).
+            # 1..k-1 (quadratic tiny-stage count).
             stepped = checkpoint_audited(
                 contrib.groupBy("variant", "to_state").agg(
                     dsum_d(F.col("pr")).alias("r")
@@ -3270,8 +3260,6 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             v = stepped.filter(F.col("to_state") != "purchase").select(
                 "variant", F.col("to_state").alias("state"), "r"
             )
-    finally:
-        spark.conf.set(shuffle_key, saved_parts)
     allabs = absorbed[0]
     for a in absorbed[1:]:
         allabs = allabs.unionAll(a)

@@ -21,14 +21,15 @@ declarative for Catalyst.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beam_pyspark_runner_spark.plans.audit import checkpoint_audited
+from beam_pyspark_runner_spark.plans.fixpoint import fixpoint
 from beam_pyspark_runner_spark.queries.registry import register
+from beam_pyspark_runner_spark.session import scoped_conf
 from beam_pyspark_runner_spark.sources.readers import load_table, parquet_rowcount
 
 DAMPING = 0.85
@@ -49,49 +50,6 @@ def _dsum_exact(col: Column) -> Column:
     return F.sum(col.cast(_ACC)).cast("double")
 
 
-def _ckpt_observed(df: DataFrame, metric: Column, **kw):
-    """checkpoint_audited with a scalar metric observed on the SAME
-    materialization job.
-
-    Round-13 (guide §1.2 step 1 — don't schedule jobs you can avoid):
-    Observation metrics fire on the eager localCheckpoint's own action,
-    so a loop's per-round termination test (`isEmpty()` / a one-row
-    `agg().collect()`) costs ZERO extra jobs instead of one per round.
-    Metric choice is the caller's; it must be grouping-free (Spark's
-    `observe` contract) and order-insensitive (count / exact-integer
-    sum here — never a float fold)."""
-    obs = Observation()
-    pinned = checkpoint_audited(df.observe(obs, metric.alias("m")), **kw)
-    return pinned, obs.get["m"]
-
-
-def _ckpt_counted(df: DataFrame, **kw):
-    """`_ckpt_observed` with a row count — the frontier-loop emptiness
-    test fused into the frontier's checkpoint job."""
-    pinned, n = _ckpt_observed(df, F.count(F.lit(1)), **kw)
-    return pinned, int(n)
-
-
-def _ckpt_merged(df: DataFrame, new_pred: Column, **kw):
-    """Pin the MERGED visited set and observe the just-appended layer's
-    row count on the same job.
-
-    Round-13 A/B result (quiet host, stash method): keeping the visited
-    set as a LAZY union of per-round checkpointed layers regressed the
-    seed-keyed BFS loops (closeness 7.1 s → 13.8 s, betweenness
-    10.0 s → 14.0 s medians at sf0.1) — every round's anti-join right
-    side became a K-leaf RDD union whose task count grows with depth.
-    Re-pinning the merged set keeps the anti-join side ONE compact RDD
-    while the fused Observation still makes the round cost exactly one
-    job: strictly fewer jobs than the old 3-jobs-per-round shape and
-    strictly fewer tasks than the layered shape. The next frontier is a
-    lazy `filter(new_pred)` over the pinned blocks — no extra job."""
-    pinned, n = _ckpt_observed(
-        df, F.sum(F.when(new_pred, 1).otherwise(0)), **kw
-    )
-    return pinned, int(n or 0)
-
-
 _STRIDE_LOG = 4  # jump-table doubling levels → stride = 2**4 = 16 hops/round
 
 
@@ -100,33 +58,21 @@ def _jump_table(
 ) -> DataFrame:
     """Min-plus JUMP TABLE over a fixture-bounded graph: (src, dst, d)
     with d = cheapest path of ≤ 2**_STRIDE_LOG edges (hop count when
-    ``weight`` is None, else summed edge weight).
+    ``weight`` is None, else summed edge weight). A loop round that
+    walks this table advances 2**_STRIDE_LOG hops, so rounds (and their
+    driver jobs) drop by that factor.
 
-    Round-14 (guide §1.2 do less work / §2.6 fewer rounds): the
-    BFS-family loops' cost is the per-round driver-job floor
-    (~90-130 ms × eccentricity rounds — scc's two reach passes ran
-    ~95 rounds each). Recursive doubling — J_{2s} = min(J_s,
-    J_s ∘ J_s), the classic parallel path-doubling technique — builds
-    in _STRIDE_LOG pinned squarings a table that lets each loop round
-    advance 2**_STRIDE_LOG hops, cutting rounds (and driver jobs) by
-    that factor while each round's join stays tiny. Exactness: the
-    union+groupBy-min squaring is min-plus matrix squaring, so
-    J_k(u,v) = exact cheapest path among paths of ≤ k edges.
+    Exactness: each level is J_{2s} = min(J_s, J_s ∘ J_s) — min-plus
+    matrix squaring — so J_k(u, v) is the exact cheapest path among
+    paths of ≤ k edges.
 
     Boundedness (the _narrow_shuffle contract): the table is a prefix
-    of the transitive closure of the ≤``_BFS_N``-node fixture graph —
-    ≤ _BFS_N² rows by construction (measured 35,548 at stride 16 on
-    the 512-node functional graph; the FULL closure, 181,902 rows, is
-    why doubling stops at 2**4: building it measured SLOWER than the
-    stride loop it replaced). At data-scaled |V| this prefix is O(|V|·
-    reach₁₆) — the standard doubling trade of more memory per round
-    for O(log d) instead of O(d) global synchronization barriers.
+    of the transitive closure of the ≤``_BFS_N``-node fixture graph, so
+    ≤ _BFS_N² rows; at data-scaled |V| it is O(|V|·reach₁₆).
 
-    ``longest=True`` flips the semiring to MAX-plus — d = the LONGEST
+    ``longest=True`` flips the semiring to MAX-plus: d = the LONGEST
     path of ≤ 2**_STRIDE_LOG edges. Sound ONLY on acyclic graphs (on a
-    DAG every walk is a path, so the squaring's max over compositions
-    is a max over real paths; on a cyclic graph it would diverge) —
-    dag_longest_path_layers' src<dst orientation guarantees that."""
+    DAG every walk is a path; on a cyclic graph the squaring diverges)."""
     agg = F.max if longest else F.min
     w = (F.col(weight) if weight else F.lit(1)).cast("long")
     j = checkpoint_audited(
@@ -150,67 +96,28 @@ def _jump_table(
     return j
 
 
-@contextmanager
 def _narrow_shuffle(spark: SparkSession, *, state_rows: int,
                     rows_per_partition: int = 1_000_000):
-    """Narrow the shuffle width for a BOUNDED-state iteration, restored
-    on exit (the pca_power_iteration / markov_removal_attribution
-    pattern).
+    """Conf scope for a BOUNDED-state loop: shuffle width
+    ceil(state_rows / rows_per_partition) and AQE off, both restored on
+    exit. A loop whose per-round state is capped by the fixture graph
+    has nothing for AQE to coalesce or split, and at the session width
+    its rounds pay for near-empty tasks.
 
-    ``state_rows`` is REQUIRED: callers must state the provable upper
-    bound on the loop's per-round state row count, and the width is
-    derived as ceil(state_rows / rows_per_partition) instead of a
-    hard-coded 1 (round-14, verdict ask #4) — copy-pasting this wrapper
-    onto a loop over a data-scaled graph now yields a width that grows
-    with the stated bound rather than silently serializing 100 TB. The
-    six fixture-graph callers pass bounds ≤ a few thousand compact
-    (long, long) rows, so they derive the same single partition the
-    round-13 measurements were taken at. ~1M tiny rows per partition
-    keeps iteration-state partitions in the tens of MB (guide §2.2's
-    small end, appropriate for shuffle-per-round loop state).
+    ``state_rows`` must be a provable upper bound on the loop's
+    per-round state rows, so the width grows with the bound instead of
+    serializing a data-scaled loop. Neither width nor AQE changes
+    results.
 
-    Scope caveat: the mutation is SESSION-global conf — any query
-    running concurrently on the same session (e.g. the scc fwd/bwd
-    thread pool, which is the one sanctioned case) also sees the
-    narrowed width / disabled AQE for the duration. Result-safe
-    (partition count and AQE never change results — r12 shape axes),
-    but a perf trap for unrelated concurrent work: don't hold this
-    context around anything but the loop itself.
-
-    Round-13 (guide §2.2 — size partitions to the data): the synthetic
-    ≤512-node graph loops shuffle ≤(seeds x 512)-row frontiers, but each
-    round's distinct/anti-join/agg stages still launched
-    spark.sql.shuffle.partitions-many tasks; at ~100 rounds the task
-    overhead dominated (closeness A/B same-session: 19.6-32.9 s at 32
-    partitions vs ~9.0 s at 1, sf0.01). Scope: ONLY loops whose state
-    is capped by the fixture graph's node count — corpus-scale loops
-    (pagerank, dedup_components) keep the session width, where the same
-    narrowing would serialize real data. Partition count never changes
-    results (the r12 partitions7 shape axis certifies).
-
-    Round-13 session 3: AQE is suspended for the same scope. A loop
-    narrowed to 1 shuffle partition gives AQE nothing to adapt — no
-    partitions to coalesce, no skew to split — yet it still pays a
-    per-round re-optimization pass and stage-materialization jobs.
-    A/B min-of-3 at sf0.01: closeness 5.91 → 5.28 s, bfs 4.60 → 4.21,
-    bellman-ford 8.37 → 7.14. Result-identity under AQE-off is
-    certified for the whole registry by the r12 shape axis."""
+    The conf is session-global: hold the scope around the loop only.
+    A caller running loops concurrently (scc's two passes) holds ONE
+    scope around all of them — a scope per loop would restore the
+    session width under the loop still running."""
     parts = max(1, -(-state_rows // rows_per_partition))
-    keys = {
+    return scoped_conf(spark, {
         "spark.sql.shuffle.partitions": str(parts),
         "spark.sql.adaptive.enabled": "false",
-    }
-    saved = {k: spark.conf.get(k) for k in keys}
-    try:
-        # Sets live INSIDE the try (round-13 ADVICE): a throw after the
-        # first set still hits the finally, so no partial application
-        # can leak a narrowed session.
-        for k, v in keys.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    })
 
 
 _EDGE_SQL = """
@@ -714,6 +621,62 @@ _BFS_N = 512
 _BFS_DEPTH_CAP = 20
 
 
+def _functional_edges(spark: SparkSession, *, sparse: bool = False) -> DataFrame:
+    """The pinned edge list of the deterministic out-degree-2 functional
+    graph the iterative graph queries walk: k → 3k+1 and k → 5k+2
+    (mod ``_BFS_N``) — cyclic, fully synthetic, identical in both
+    engines. ``sparse`` drops the 3k+1 edge at k ≡ 0 (mod 3) and keeps
+    the 5k+2 edge only at even k (the scc / dag / bellman graph)."""
+    n = spark.range(_BFS_N)
+    a, b = n, n
+    if sparse:
+        a, b = n.filter(F.col("id") % 3 != 0), n.filter(F.col("id") % 2 == 0)
+    return checkpoint_audited(
+        a.select(F.col("id").alias("src"), ((3 * F.col("id") + 1) % _BFS_N).alias("dst"))
+        .unionAll(b.select(F.col("id"), ((5 * F.col("id") + 2) % _BFS_N)))
+    )
+
+
+def _hop_distances(spark: SparkSession, init: DataFrame, seed_cols: list[str]) -> DataFrame:
+    """(*seed_cols, node, hops) shortest hop distances ≤ _BFS_DEPTH_CAP over
+    the full functional graph, from the sources in ``init`` (hops 0).
+
+    Each round walks the stride-s jump table (_jump_table): round i
+    discovers exactly the nodes of true depth in ((i-1)·s, i·s] at their
+    exact depth — a shortest path to such a node passes a node at depth
+    d-s, discovered in round i-1, and the table covers the ≤s-edge
+    suffix with its true length. The oracles' depth cap is a declared
+    depth: ceil(cap / s) rounds, then nodes past the cap are filtered.
+
+    State is the merged visited set, pinned once per round; the next
+    frontier is a lazy filter over it, and the per-round anti-join
+    against it is the visited-set test."""
+    stride = 1 << _STRIDE_LOG
+    edges = _functional_edges(spark)
+
+    def layer(rnd):
+        return F.col("hops") > (rnd - 1) * stride
+
+    # state bound includes the jump table (≤ _BFS_N² rows)
+    with _narrow_shuffle(spark, state_rows=_BFS_N * _BFS_N):
+        jt = _jump_table(edges)
+
+        def step(dist, rnd):
+            frontier = dist.filter(layer(rnd - 1))
+            reached = (
+                frontier.join(jt, frontier.node == jt.src)
+                .groupBy(*seed_cols, F.col("dst").alias("node"))
+                .agg(F.min(F.col("hops") + F.col("d")).alias("hops"))
+            )
+            return dist.unionAll(reached.join(dist, [*seed_cols, "node"], "left_anti"))
+
+        dist = fixpoint(
+            "_hop_distances", init, step,
+            added=layer, depth=-(-_BFS_DEPTH_CAP // stride),
+        )
+    return dist.filter(F.col("hops") <= _BFS_DEPTH_CAP)
+
+
 @register(
     "bfs_shortest_hops",
     oracle=f"""
@@ -738,76 +701,18 @@ _BFS_DEPTH_CAP = 20
 def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-source shortest HOP distances by frontier-parallel BFS —
     the Pregel pattern GraphX/GraphFrames use: each round joins only the
-    NEW frontier (nodes first reached last round) against the edge list,
-    so round cost is O(edges touched at that depth), and the number of
-    rounds is the graph's eccentricity from the source, not |V|.
-
-    Graph: a deterministic out-degree-2 functional graph over 512
-    nodes (k → 3k+1 and k → 5k+2, mod 512) — cyclic,
-    fully synthetic, identical in both engines. The oracle walks the
-    same graph with a recursive CTE and takes MIN(depth); a MATCH
-    proves frontier BFS = level-order distance.
-
-    Scale: `dist` holds (node, hops) pairs only; lineage is truncated
-    every round with localCheckpoint (swap for reliable checkpoint()
-    on a real cluster — the `connected_components` discipline). The
-    per-round anti-join against the accumulated distance table is the
-    visited-set membership test; both sides shuffle on node id. The
-    depth cap turns a disconnected or adversarial input into a loud
-    stop instead of an infinite loop (frontier exhaustion is the
-    normal exit)."""
-    n = spark.range(_BFS_N)
-    edges = (
-        checkpoint_audited(n.select(
-            F.col("id").alias("src"), ((3 * F.col("id") + 1) % _BFS_N).alias("dst")
-        )
-        .unionAll(
-            n.select(F.col("id"), ((5 * F.col("id") + 2) % _BFS_N))
-        ))
+    NEW frontier (nodes first reached last round), so round cost is
+    O(edges touched at that depth) and the round count is bounded by the
+    source's eccentricity, not |V|. The oracle walks the same
+    functional graph with a recursive CTE and takes MIN(depth); a MATCH
+    proves frontier BFS = level-order distance (_hop_distances)."""
+    return _hop_distances(
+        spark,
+        spark.range(1).select(
+            F.lit(0).cast("long").alias("node"), F.lit(0).cast("long").alias("hops")
+        ),
+        [],
     )
-    # Merged-pin visited set (round-13, guide §1.2 step 1 / §5.4): each
-    # round pins checkpoint(dist ∪ new) ONCE, with the new-layer row
-    # count observed on that same materialization job (_ckpt_merged) —
-    # the old shape's separate `new` checkpoint and `isEmpty()` probe
-    # jobs are gone (3 jobs/round → 1), and unlike a lazy union of
-    # per-layer checkpoints the anti-join's right side stays one
-    # compact RDD (the layered variant's per-round task count grew
-    # with depth and measured SLOWER; see _ckpt_merged docstring).
-    # The next frontier is a lazy filter(hops == depth) over the
-    # pinned blocks.
-    dist = spark.range(1).select(
-        F.lit(0).cast("long").alias("node"), F.lit(0).cast("long").alias("hops")
-    )
-    frontier = dist
-    # Round-14: stride-16 rounds over the min-plus jump table instead of
-    # 1-hop rounds over the raw edges (_jump_table) — 20 driver-job
-    # rounds → 2. Exactness: round i discovers exactly the nodes with
-    # true depth in ((i-1)·s, i·s] at their exact depth (a shortest path
-    # to such a node passes a node at depth d-s, discovered exactly in
-    # round i-1, and J_s covers the ≤s-edge suffix with its true
-    # length); nodes past the oracle's depth cap are filtered at return,
-    # matching the capped recursion the oracle declares.
-    stride = 1 << _STRIDE_LOG
-    with _narrow_shuffle(spark, state_rows=_BFS_N * _BFS_N):
-        jt = _jump_table(edges)
-        for rnd in range(1, -(-_BFS_DEPTH_CAP // stride) + 1):
-            reached = (
-                frontier.join(jt, frontier.node == jt.src)
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("hops") + F.col("d")).alias("hops"),
-                )
-                .groupBy("node")
-                .agg(F.min("hops").alias("hops"))
-            )
-            new = reached.join(dist, "node", "left_anti").select("node", "hops")
-            dist, n_new = _ckpt_merged(
-                dist.unionAll(new), F.col("hops") > (rnd - 1) * stride
-            )
-            if n_new == 0:
-                break
-            frontier = dist.filter(F.col("hops") > (rnd - 1) * stride)
-    return dist.filter(F.col("hops") <= _BFS_DEPTH_CAP)
 
 
 @register(
@@ -1474,67 +1379,26 @@ _CLOSE_SEEDS = (0, 7, 101, 350)  # fixed pivot sample
 def closeness_centrality_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wasserman–Faust closeness centrality from a FIXED pivot sample —
     the Eppstein–Wang recipe that makes centrality affordable at graph
-    scale: instead of |V| BFS traversals (all-pairs — the thing you
-    cannot run on a billion-node graph), run one MULTI-SOURCE BFS whose
+    scale: instead of |V| BFS traversals, run one MULTI-SOURCE BFS whose
     state is (seed, node, hops) for k = {len(_CLOSE_SEEDS)} pivots, so
     every round is ONE frontier⋈edges join shared by all seeds and the
     total work is k× a single BFS regardless of |V|. Closeness(seed) =
     ((r−1)/Σd)·((r−1)/(n−1)) with r = reached count — the
     reachability-corrected form that stays comparable on directed
-    graphs where some seeds reach fewer nodes. Same deterministic
-    512-node functional graph, lineage discipline (per-round
-    localCheckpoint), depth cap, and recursive-CTE adjudication as
-    bfs_shortest_hops — the MATCH proves the shared-frontier
-    multi-source walk equals k independent level-order traversals.
+    graphs where some seeds reach fewer nodes. Same walk
+    (_hop_distances) and recursive-CTE adjudication as
+    bfs_shortest_hops, keyed by (seed, node) — the MATCH proves the
+    shared-frontier walk equals k independent level-order traversals.
     Exact integer (r−1)² and Σd; one double division."""
-    n = spark.range(_BFS_N)
-    edges = (
-        checkpoint_audited(n.select(
-            F.col("id").alias("src"),
-            ((3 * F.col("id") + 1) % _BFS_N).alias("dst"),
-        )
-        .unionAll(n.select(F.col("id"), ((5 * F.col("id") + 2) % _BFS_N))))
+    seeds = spark.createDataFrame([(s,) for s in _CLOSE_SEEDS], "seed long")
+    dist = _hop_distances(
+        spark,
+        seeds.select(
+            "seed", F.col("seed").alias("node"), F.lit(0).cast("long").alias("hops")
+        ),
+        ["seed"],
     )
-    seeds = spark.createDataFrame(
-        [(s,) for s in _CLOSE_SEEDS], "seed long"
-    )
-    # Merged-pin visited set + fused emptiness test (round-13): see
-    # bfs_shortest_hops — identical discipline, (seed, node) keyed.
-    dist = seeds.select(
-        "seed",
-        F.col("seed").alias("node"),
-        F.lit(0).cast("long").alias("hops"),
-    )
-    frontier = dist
-    # Round-14: stride-16 rounds over the min-plus jump table (see
-    # bfs_shortest_hops — identical exactness argument, (seed, node)
-    # keyed; the depth-capped membership the oracle declares is restored
-    # by the hops filter below). state bound includes the jump table
-    # (a transitive-closure prefix, ≤ _BFS_N² rows).
-    stride = 1 << _STRIDE_LOG
-    with _narrow_shuffle(spark, state_rows=_BFS_N * _BFS_N):
-        jt = _jump_table(edges)
-        for rnd in range(1, -(-_BFS_DEPTH_CAP // stride) + 1):
-            reached = (
-                frontier.join(jt, frontier.node == jt.src)
-                .select(
-                    "seed",
-                    F.col("dst").alias("node"),
-                    (F.col("hops") + F.col("d")).alias("hops"),
-                )
-                .groupBy("seed", "node")
-                .agg(F.min("hops").alias("hops"))
-            )
-            new = reached.join(dist, ["seed", "node"], "left_anti").select(
-                "seed", "node", "hops"
-            )
-            dist, n_new = _ckpt_merged(
-                dist.unionAll(new), F.col("hops") > (rnd - 1) * stride
-            )
-            if n_new == 0:
-                break
-            frontier = dist.filter(F.col("hops") > (rnd - 1) * stride)
-    return dist.filter(F.col("hops") <= _BFS_DEPTH_CAP).groupBy("seed").agg(
+    return dist.groupBy("seed").agg(
         F.count("*").cast("long").alias("n_reached"),
         F.sum("hops").cast("long").alias("sum_hops"),
         (
@@ -1580,79 +1444,50 @@ def scc_pivot_fwbw(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hendrickson–Pınar 2000; the algorithm GraphX/Gunrock use at scale,
     where Tarjan's sequential stack cannot run): SCC(pivot) = nodes
     reachable FROM the pivot ∩ nodes that REACH the pivot. Both
-    reachability sets come from the shared frontier-parallel BFS
-    discipline (bfs_shortest_hops) — the backward pass simply joins the
-    frontier against edge DESTINATIONS — and the intersection is one
-    equi-join of two node sets. In the full algorithm the remainder
-    splits into three independent partitions (fwd-only / bwd-only /
-    neither) that recurse IN PARALLEL; one certified pivot round is the
-    building block. Same deterministic 512-node functional graph as the
-    BFS family; the recursive-CTE oracle walks both directions to a
-    fixpoint, so a MATCH certifies the frontier loop's termination
-    behavior too (frontier exhaustion, not the depth cap, decides
-    membership here). The edge set is the BFS family's functional
-    graph SPARSIFIED (drop 3k+1 edges at k≡0 mod 3, keep 5k+2 edges
-    only at even k) so the pivot SCC is proper — 370 of 512 nodes,
-    with nonempty fwd-only and bwd-only remainders — rather than the
-    whole graph."""
-    n = spark.range(_BFS_N)
-    edges = (
-        checkpoint_audited(n.filter(F.col("id") % 3 != 0)
-        .select(
-            F.col("id").alias("src"),
-            ((3 * F.col("id") + 1) % _BFS_N).alias("dst"),
-        )
-        .unionAll(
-            n.filter(F.col("id") % 2 == 0).select(
-                F.col("id"), ((5 * F.col("id") + 2) % _BFS_N)
-            )
-        ))
-    )
+    reachability sets come from a frontier-parallel walk of the
+    stride-16 jump table — the backward pass joins the frontier against
+    table DESTINATIONS — and the intersection is one equi-join of two
+    node sets. In the full algorithm the remainder splits into three
+    independent partitions (fwd-only / bwd-only / neither) that recurse
+    IN PARALLEL; one certified pivot round is the building block. The
+    graph is the sparsified functional graph (_functional_edges), whose
+    pivot SCC is proper — 370 of 512 nodes, with nonempty fwd-only and
+    bwd-only remainders. The recursive-CTE oracle walks both directions
+    to a fixpoint, so frontier exhaustion, not a depth, decides
+    membership: the {_BFS_N}-round limit is a safety cap and raises."""
+    edges = _functional_edges(spark, sparse=True)
 
     def reach(jt: DataFrame, key_col: str, next_col: str) -> DataFrame:
-        # Merged-pin visited set + fused emptiness test (round-13; see
-        # bfs_shortest_hops / _ckpt_merged). Round-14: each round walks
-        # the stride-16 JUMP TABLE instead of raw edges (_jump_table) —
-        # the sparsified graph's reach ran ~95 one-hop rounds per
-        # direction at ~90-130 ms of driver-job floor each; stride-16
-        # rounds cut that to ~7, and ONE jump table serves both
-        # directions (reachability in the reversed graph is the same
-        # table joined on dst). Reachability needs only the SET, so the
-        # round number rides along as `d` purely to mark each round's
-        # new layer for the frontier filter, and is dropped at return.
-        seen = spark.range(1).select(
-            F.lit(_SCC_PIVOT).cast("long").alias("node"),
-            F.lit(0).cast("long").alias("d"),
-        )
-        frontier = seen
-        for rnd in range(1, _BFS_N + 1):  # hard upper bound; frontier exhausts first
-            step = (
+        # the round number rides along as `d` only to mark each round's
+        # layer for the frontier filter
+        def step(seen, rnd):
+            frontier = seen.filter(F.col("d") == rnd - 1)
+            new = (
                 frontier.join(jt, frontier.node == jt[key_col])
                 .select(F.col(next_col).alias("node"))
                 .distinct()
+                .join(seen, "node", "left_anti")
             )
-            new = step.join(seen, "node", "left_anti").select(
-                "node", F.lit(rnd).cast("long").alias("d")
-            )
-            seen, n_new = _ckpt_merged(
-                seen.unionAll(new), F.col("d") == rnd
-            )
-            if n_new == 0:
-                break
-            frontier = seen.filter(F.col("d") == rnd)
+            return seen.unionAll(new.select("node", F.lit(rnd).cast("long").alias("d")))
+
+        seen = fixpoint(
+            "scc_pivot_fwbw",
+            spark.range(1).select(
+                F.lit(_SCC_PIVOT).cast("long").alias("node"),
+                F.lit(0).cast("long").alias("d"),
+            ),
+            step,
+            added=lambda rnd: F.col("d") == rnd,
+            cap=_BFS_N,
+        )
         return seen.select("node")
 
-    # The two reachability passes are independent until the final
-    # intersection — run them as concurrent driver-submitted job streams
-    # (guide §2.6: overlap independent jobs; each round's 512-row tasks
-    # leave most executor slots idle, so the passes interleave instead
-    # of serializing the rounds twice).
+    # The two passes are independent until the final intersection, so
+    # they run as concurrent job streams. ONE _narrow_shuffle scope
+    # covers both; the jump table (≤ _BFS_N² rows) is shared — reach in
+    # the reversed graph is the same table joined on dst.
     from concurrent.futures import ThreadPoolExecutor
 
-    # _narrow_shuffle wraps BOTH passes: session conf is shared, so one
-    # set/restore around the pool covers the two concurrent job streams.
-    # State bound includes the shared jump table (a transitive-closure
-    # prefix, ≤ _BFS_N² rows).
     with _narrow_shuffle(spark, state_rows=_BFS_N * _BFS_N), \
             ThreadPoolExecutor(max_workers=2) as pool:
         jt = _jump_table(edges)
@@ -1699,69 +1534,33 @@ def dag_longest_path_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor needs): layer(v) = length of the longest path ending at v,
     so layer L can only start after some chain of L predecessors. Dual
     of the BFS family: BFS relaxes MIN over frontier rounds, this
-    relaxes MAX with Bellman-style rounds — dist' = max(dist, max over
-    incoming edges of dist(src)+1) — which converges in (longest path)
-    rounds because updates only ever increase and are bounded by the
-    DAG depth. Termination is detected by the monotone invariant
-    Σ layer: unchanged sum ⟺ fixpoint (no per-node diff join needed);
-    the {_DAG_CAP}-round cap turns an accidental cycle (where longest
-    path is undefined) into a loud error instead of an infinite loop.
-    The DAG comes from orienting the sparsified functional graph
-    upward (src < dst — acyclic by construction); the recursive-CTE
-    oracle enumerates all (node, depth) pairs and takes MAX. Per-round
-    plan: one edges⋈dist join + one max-agg, localCheckpoint-pinned
-    (linear lineage, the k_core/BFS discipline)."""
-    n = spark.range(_BFS_N)
-    edges = (
-        checkpoint_audited(n.filter(F.col("id") % 3 != 0)
-        .select(
-            F.col("id").alias("src"),
-            ((3 * F.col("id") + 1) % _BFS_N).alias("dst"),
-        )
-        .unionAll(
-            n.filter(F.col("id") % 2 == 0).select(
-                F.col("id"), ((5 * F.col("id") + 2) % _BFS_N)
-            )
-        )
-        .filter(F.col("src") < F.col("dst")))
-    )
-    dist = n.select(
-        F.col("id").alias("node"), F.lit(0).cast("long").alias("d")
-    )
-    prev_sum = 0
-    fixpoint = False
-    # Round-14: relax over the stride-16 MAX-plus jump table
-    # (_jump_table(longest=True) — sound here because the src<dst
-    # orientation makes the graph a DAG) instead of single edges: after
-    # round i the table covers every longest path of ≤ 16·i edges, so
-    # the Σd fixpoint arrives in ceil(depth/16) rounds instead of one
-    # per DAG level. Same max-relaxation algebra, same unique fixpoint.
-    # State bound includes the jump table (closure prefix ≤ _BFS_N²).
+    relaxes MAX — dist' = max(dist, dist(src) + J(src, v)) over the
+    stride-16 MAX-plus jump table (sound: the src<dst orientation of
+    the sparsified functional graph makes it acyclic). Updates only
+    increase and are bounded by the DAG depth, so the monotone Σ layer
+    is unchanged ⟺ fixpoint; the {_DAG_CAP}-round safety cap turns an
+    accidental cycle (where longest path is undefined) into a loud
+    error. The recursive-CTE oracle enumerates all (node, depth) pairs
+    and takes MAX."""
+    edges = _functional_edges(spark, sparse=True).filter(F.col("src") < F.col("dst"))
+    # state bound includes the jump table (≤ _BFS_N² rows)
     with _narrow_shuffle(spark, state_rows=_BFS_N * _BFS_N):
         jt = _jump_table(edges, longest=True)
-        for _ in range(_DAG_CAP):
-            cand = (
-                dist.join(jt, dist.node == jt.src)
-                .select(
-                    F.col("dst").alias("node"),
-                    (dist["d"] + jt["d"]).alias("d"),
-                )
+
+        def step(dist, rnd):
+            cand = dist.join(jt, dist.node == jt.src).select(
+                F.col("dst").alias("node"), (dist["d"] + jt["d"]).alias("d")
             )
-            # Round-13: the Σd fixpoint probe rides the checkpoint job
-            # via Observation (_ckpt_observed) — previously a separate
-            # agg().collect() job per round. Exact integer sum either way.
-            dist, cur = _ckpt_observed(
-                dist.unionAll(cand).groupBy("node").agg(F.max("d").alias("d")),
-                F.sum("d"),
-            )
-            if cur == prev_sum:
-                fixpoint = True
-                break
-            prev_sum = cur
-    if not fixpoint:
-        raise RuntimeError(
-            "dag_longest_path_layers: no fixpoint within "
-            f"{_DAG_CAP} rounds — input graph has a cycle"
+            return dist.unionAll(cand).groupBy("node").agg(F.max("d").alias("d"))
+
+        dist = fixpoint(
+            "dag_longest_path_layers",
+            spark.range(_BFS_N).select(
+                F.col("id").alias("node"), F.lit(0).cast("long").alias("d")
+            ),
+            step,
+            total="d",
+            cap=_DAG_CAP,
         )
     return dist.groupBy(F.col("d").alias("layer")).agg(
         F.count("*").cast("long").alias("n_nodes"),
@@ -1807,94 +1606,49 @@ def bellman_ford_weighted_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     hops; with md5-derived edge weights 1..9 the cheapest route often
     takes MORE hops), and the relaxation pattern (Pregel/GAS) that
     scales where Dijkstra's sequential priority queue cannot: each
-    round joins only the IMPROVED frontier against the edge list,
+    round joins only the IMPROVED frontier against the stride-16
+    min-plus jump table (exact for every optimal path of ≤ 16 edges),
     merges via per-node MIN, and keeps strictly-improved rows as the
-    next frontier — empty frontier ⟺ fixpoint (no positive-weight
-    negative-cycle concerns), with a {_BFS_N}-round cap as the loud
-    stop. Same sparsified 512-node graph as scc_pivot_fwbw; the
-    recursive-CTE oracle enumerates path costs with a prune at
-    {_BF_PRUNE} (safe: every reachable node's true distance ≤ 207 —
-    prune can only discard paths that are already beaten) and takes
-    MIN. Per-round lineage localCheckpoint-pinned (k_core/BFS
-    discipline); distances stay integer."""
+    next frontier — empty frontier ⟺ fixpoint (weights are positive),
+    with a {_BFS_N}-round safety cap that raises. Same sparsified
+    graph as scc_pivot_fwbw; the recursive-CTE oracle enumerates path
+    costs with a prune at {_BF_PRUNE} (safe: every reachable node's
+    true distance ≤ 207 — prune can only discard paths that are
+    already beaten) and takes MIN. Distances stay integer."""
     from beam_pyspark_runner_spark.functions.hashing import h32
 
-    n = spark.range(_BFS_N)
-    raw = (
-        n.filter(F.col("id") % 3 != 0)
-        .select(
-            F.col("id").alias("src"),
-            ((3 * F.col("id") + 1) % _BFS_N).alias("dst"),
-        )
-        .unionAll(
-            n.filter(F.col("id") % 2 == 0).select(
-                F.col("id"), ((5 * F.col("id") + 2) % _BFS_N)
-            )
-        )
+    edges = _functional_edges(spark, sparse=True).withColumn(
+        "w", h32(F.concat_ws("-", F.lit("w"), F.col("src"), F.col("dst"))) % 9 + 1
     )
-    edges = checkpoint_audited(raw.select(
-        "src",
-        "dst",
-        (
-            h32(F.concat_ws("-", F.lit("w"), F.col("src"), F.col("dst"))) % 9
-            + 1
-        ).alias("w"),
-    ))
     dist = spark.range(1).select(
         F.lit(0).cast("long").alias("node"), F.lit(0).cast("long").alias("d")
     )
-    frontier = dist
-    fixpoint = False
-    # Round-14: relax over the stride-16 min-plus jump table
-    # (_jump_table with the edge weights) instead of raw edges — after
-    # round i the table is exact for every optimal path of ≤ 16·i
-    # edges, so the fixpoint arrives in ceil(max-optimal-path-edges/16)
-    # rounds instead of one round per edge. The relaxation algebra is
-    # unchanged (per-node MIN of additive path costs); the fixpoint is
-    # the same unique shortest-distance table. State bound includes the
-    # jump table (a transitive-closure prefix, ≤ _BFS_N² rows).
+    # state bound includes the jump table (≤ _BFS_N² rows)
     with _narrow_shuffle(spark, state_rows=_BFS_N * _BFS_N):
         jt = _jump_table(edges, weight="w").select(
             "src", "dst", F.col("d").alias("w")
         )
-        for _ in range(_BFS_N):
+
+        def step(frontier, rnd):
+            # the driver pins the improved frontier; `dist` (the merged
+            # relaxation) keeps its own pin, folded in one round late
+            nonlocal dist
+            if rnd > 1:
+                dist = checkpoint_audited(
+                    dist.unionAll(frontier).groupBy("node").agg(F.min("d").alias("d"))
+                )
             cand = (
                 frontier.join(jt, frontier.node == jt.src)
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("d") + F.col("w")).alias("d"),
-                )
-                .groupBy("node")
-                .agg(F.min("d").alias("d"))
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.min(F.col("d") + F.col("w")).alias("d"))
             )
-            # Round-13: emptiness test fused into the frontier checkpoint
-            # (_ckpt_counted) — one job per round instead of two; the dist
-            # re-aggregation below keeps its own pin (it is a relaxation,
-            # not an append-only set, so the merged table must stay the
-            # next round's join input with flat lineage).
-            improved, n_improved = _ckpt_counted(
-                cand.join(
-                    dist.select(F.col("node"), F.col("d").alias("old")),
-                    "node",
-                    "left",
-                )
+            return (
+                cand.join(dist.select("node", F.col("d").alias("old")), "node", "left")
                 .filter(F.col("old").isNull() | (F.col("d") < F.col("old")))
                 .select("node", "d")
             )
-            if n_improved == 0:
-                fixpoint = True
-                break
-            dist = (
-                checkpoint_audited(dist.unionAll(improved)
-                .groupBy("node")
-                .agg(F.min("d").alias("d")))
-            )
-            frontier = improved
-    if not fixpoint:
-        raise RuntimeError(
-            "bellman_ford_weighted_paths: no fixpoint within "
-            f"{_BFS_N} rounds"
-        )
+
+        fixpoint("bellman_ford_weighted_paths", dist, step, cap=_BFS_N)
     return dist.select("node", F.col("d").alias("shortest_dist"))
 
 
@@ -2478,9 +2232,9 @@ def betweenness_centrality_sampled(spark: SparkSession, sf_dir: str) -> DataFram
     pagerank dsum discipline), so no float summation order exists in
     either engine. Betweenness(v) = sum of deltas over seeds, v != seed.
 
-    Lineage discipline: per-round localCheckpoint via checkpoint_audited
-    exactly like bfs_shortest_hops; the unrolled-CTE oracle mirrors the
-    loop level-for-level, so a MATCH certifies sigma counting, the
+    The forward pass stops at the declared depth kappa (or earlier, at
+    an empty level); the unrolled-CTE oracle mirrors the loop
+    level-for-level, so a MATCH certifies sigma counting, the
     level-(d+1)-successor relation AND the dependency recursion.
 
     Scale (100 TB): every round is one frontier-vs-edges equi-join
@@ -2489,47 +2243,41 @@ def betweenness_centrality_sampled(spark: SparkSession, sf_dir: str) -> DataFram
     same loop runs with the edge relation disk-backed; the depth cap
     bounds rounds, and Brandes-Pich pivot counts, not |V|, set the
     constant."""
-    n = spark.range(_BFS_N)
-    edges = checkpoint_audited(
-        n.select(
-            F.col("id").alias("src"),
-            ((3 * F.col("id") + 1) % _BFS_N).alias("dst"),
-        ).unionAll(n.select(F.col("id"), ((5 * F.col("id") + 2) % _BFS_N)))
-    )
+    edges = _functional_edges(spark)
     seeds = spark.createDataFrame([(s,) for s in _CLOSE_SEEDS], "seed long")
-    lev0 = seeds.select(
-        "seed",
-        F.col("seed").alias("node"),
-        F.lit(1).cast("long").alias("sigma"),
-    )
-    # Merged-pin visited set + fused emptiness test (round-13): see
-    # bfs_shortest_hops / _ckpt_merged. `seen` is re-pinned as ONE
-    # compact RDD per round with the new level's row count observed on
-    # the same job (3 jobs/round → 1, without the layered variant's
-    # per-round task growth); each levels[d] is a lazy filter(lv == d)
-    # over the round-d pinned set — no extra job, and the backward pass
-    # reads only pinned blocks.
-    levels = [lev0]
-    seen = lev0.withColumn("lv", F.lit(0).cast("long"))
+    # levels[d] = the level-d frontier: a lazy filter over the pinned
+    # visited set, so the backward pass reads only pinned blocks
+    levels = []
+
+    def step(seen, depth):
+        prev = seen.filter(F.col("lv") == depth - 1).select("seed", "node", "sigma")
+        levels.append(prev)
+        cand = (
+            prev.join(edges, prev.node == edges.src)
+            .groupBy("seed", F.col("dst").alias("node"))
+            .agg(F.sum("sigma").cast("long").alias("sigma"))
+        )
+        new = cand.join(seen, ["seed", "node"], "left_anti")
+        return seen.unionAll(new.withColumn("lv", F.lit(depth).cast("long")))
+
     with _narrow_shuffle(spark, state_rows=len(_CLOSE_SEEDS) * _BFS_N):
-        for _depth in range(1, _BETW_DEPTH + 1):
-            prev = levels[-1]
-            cand = (
-                prev.join(edges, prev.node == edges.src)
-                .groupBy("seed", F.col("dst").alias("node"))
-                .agg(F.sum("sigma").cast("long").alias("sigma"))
-            )
-            new = cand.join(seen, ["seed", "node"], "left_anti").select(
-                "seed", "node", "sigma", F.lit(_depth).cast("long").alias("lv")
-            )
-            seen, n_new = _ckpt_merged(
-                seen.unionAll(new), F.col("lv") == _depth
-            )
-            if n_new == 0:
-                break
-            levels.append(
-                seen.filter(F.col("lv") == _depth).select("seed", "node", "sigma")
-            )
+        seen = fixpoint(
+            "betweenness_centrality_sampled",
+            seeds.select(
+                "seed",
+                F.col("seed").alias("node"),
+                F.lit(1).cast("long").alias("sigma"),
+                F.lit(0).cast("long").alias("lv"),
+            ),
+            step,
+            added=lambda depth: F.col("lv") == depth,
+            depth=_BETW_DEPTH,
+        )
+    if len(levels) == _BETW_DEPTH:
+        # the walk reached kappa: level kappa was pinned but never a
+        # frontier (empty if round kappa added nothing — harmless, an
+        # empty level contributes no dependency)
+        levels.append(seen.filter(F.col("lv") == _BETW_DEPTH).select("seed", "node", "sigma"))
     acc = "decimal(38,10)"
     deltas = [
         levels[-1].withColumn("delta", F.lit(0.0).cast("double"))

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from beam_pyspark_runner_spark.functions.numeric import davg_sql, dsum, dsum_sql
 from beam_pyspark_runner_spark.plans.audit import checkpoint_audited
 from beam_pyspark_runner_spark.queries.registry import register
+from beam_pyspark_runner_spark.session import scoped_conf
 from beam_pyspark_runner_spark.sources import readers, writers
 from beam_pyspark_runner_spark.sources.synthetic import synth_rows_oracle_sql
 from beam_pyspark_runner_spark.sources.readers import load_table
@@ -1282,25 +1283,14 @@ def runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast.
 
     Local-mode thresholds (creationSideThreshold / scan-size gate) are
-    sized for real clusters, so the audit pins them inside a
-    try/finally (the ADVICE-r6 session-state discipline: every conf is
-    restored on all paths; broadcast is disabled only to force the
-    shuffle join shape the optimization targets)."""
-    saved = {k: spark.conf.get(k, None) for k in BLOOM_CONFS}
-    for k, v in BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        # Materialize the plan (and the result the driver hashes) while
-        # the runtime-filter confs are live; the restored session never
-        # sees the forced-SMJ settings.
-        out = checkpoint_audited(_bloom_join(spark, sf_dir), eager=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return out
+    sized for real clusters, so the query scopes them (scoped_conf:
+    every conf is restored on all paths; broadcast is disabled only to
+    force the shuffle join shape the optimization targets)."""
+    # Materialize the plan (and the result the driver hashes) while the
+    # runtime-filter confs are live; the restored session never sees the
+    # forced-SMJ settings.
+    with scoped_conf(spark, BLOOM_CONFS):
+        return checkpoint_audited(_bloom_join(spark, sf_dir), eager=True)
 
 
 # --- Hilbert space-filling-curve layout (round 7, session 4) ----------------

@@ -19,7 +19,7 @@ from beam_pyspark_runner_spark.functions.numeric import davg, davg_sql, dsum, ds
 from beam_pyspark_runner_spark.functions.ordered import bucketed_order_scan
 from beam_pyspark_runner_spark.plans.audit import checkpoint_audited
 from beam_pyspark_runner_spark.queries.registry import register
-from beam_pyspark_runner_spark.session import drain_listener_bus
+from beam_pyspark_runner_spark.session import drain_listener_bus, scoped_conf
 from beam_pyspark_runner_spark.sources.readers import load_table
 
 
@@ -3549,34 +3549,18 @@ def sql_scripting_threshold_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute the same answer; revenue is integer cents throughout, so
     the 20% test (cum·5 ≥ total) is exact in both engines.
 
-    Round 13: every interpreted scripting statement costs a driver-side
-    parse/analyze/execute cycle (~50-150 ms measured), so the flat walk
-    paid ~3 statements x O(bands-to-hit) iterations (529 at sf0.1,
-    ~1,600 statements). The walk is now two-phase — coarse over $10,000
-    superbands to locate the crossing block (~6 iterations), then fine
-    over the $100 bands inside that one block (~30 iterations) — and
-    accumulates into `thr` only at the hit, cutting interpreted
-    statements ~20x while the FOR/IF/LEAVE search stays load-bearing.
-    The band table is aggregated once outside the script and pinned
-    (localCheckpoint), so orders is scanned once instead of once per
-    view reference; the crossing band is inside the coarse-hit block by
-    construction (cum before it < 20%, cum through it >= 20%, and every
-    band above the block exceeds every band inside it), so the fine
-    walk finds the identical first-hit band and identical cumulative
-    cents as the flat walk."""
-    saved_scripting = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "bprs_script_orders"
-    )
-    bands = spark.sql(
-        """
-        SELECT CAST(FLOOR(o_totalprice / 100) AS BIGINT) AS band,
-               SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS cents
-        FROM bprs_script_orders GROUP BY 1
-        """
-    )
-    checkpoint_audited(bands).createOrReplaceTempView("bprs_script_bands")
+    Every interpreted scripting statement costs a driver-side
+    parse/analyze/execute cycle, so the walk is two-phase — coarse over
+    $10,000 superbands to locate the crossing block, then fine over the
+    $100 bands inside that one block — and accumulates into `thr` only
+    at the hit, while the FOR/IF/LEAVE search stays load-bearing. The
+    band table is aggregated once outside the script and pinned, so
+    orders is scanned once instead of once per view reference. The
+    crossing band is inside the coarse-hit block by construction (cum
+    before it < 20%, cum through it >= 20%, and every band above the
+    block exceeds every band inside it), so the fine walk finds the
+    identical first-hit band and identical cumulative cents as a flat
+    walk."""
     script = """
     BEGIN
       DECLARE above BIGINT = 0;
@@ -3607,28 +3591,33 @@ def sql_scripting_threshold_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(above AS DOUBLE) / CAST(tot AS DOUBLE) AS above_fraction;
     END
     """
-    # The script runs eagerly inside spark.sql(); localCheckpoint pins
-    # its 1-row result so the temp views and the scripting conf — both
-    # SHARED-session state — can be restored before returning (leaving
-    # either mutated is a side effect no other registered query makes).
-    try:
-        out = checkpoint_audited(spark.sql(script))
-    finally:
-        if saved_scripting is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", saved_scripting)
-        # Drop order matters (round-10, verdict #5): bprs_script_bands'
-        # definition references bprs_script_orders, and dropping a temp
-        # view triggers an uncache walk that RE-ANALYZES the remaining
-        # views' definitions on the async listener bus — dropping the
-        # base first left the dependent view unresolvable and logged a
-        # spurious TABLE_OR_VIEW_NOT_FOUND ERROR on every sweep.
-        # Dependent-first order removes the cause; the bus drain makes
-        # the teardown deterministic against still-in-flight events.
-        drain_listener_bus(spark)
-        for view in ("bprs_script_bands", "bprs_script_orders"):
-            spark.catalog.dropTempView(view)
+    # Scripting conf and the two temp views are SHARED-session state:
+    # everything from the first change on runs inside the restore. The
+    # script runs eagerly inside spark.sql(), and the pin keeps its
+    # 1-row result collectable after the views are dropped.
+    with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
+        try:
+            load_table(spark, sf_dir, "orders").createOrReplaceTempView(
+                "bprs_script_orders"
+            )
+            bands = spark.sql(
+                """
+                SELECT CAST(FLOOR(o_totalprice / 100) AS BIGINT) AS band,
+                       SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS cents
+                FROM bprs_script_orders GROUP BY 1
+                """
+            )
+            checkpoint_audited(bands).createOrReplaceTempView("bprs_script_bands")
+            out = checkpoint_audited(spark.sql(script))
+        finally:
+            # Dependent view first: dropping a temp view re-analyzes the
+            # remaining views' definitions on the async listener bus, and
+            # bprs_script_bands references bprs_script_orders. The bus
+            # drain makes the teardown deterministic against in-flight
+            # events.
+            drain_listener_bus(spark)
+            for view in ("bprs_script_bands", "bprs_script_orders"):
+                spark.catalog.dropTempView(view)
     return out
 
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
@@ -29,7 +29,9 @@ from beam_pyspark_runner_spark.functions.vectors import (
     l2_sq,
 )
 from beam_pyspark_runner_spark.plans.audit import checkpoint_audited
+from beam_pyspark_runner_spark.plans.fixpoint import checkpoint_observed
 from beam_pyspark_runner_spark.queries.registry import register
+from beam_pyspark_runner_spark.session import scoped_conf
 from beam_pyspark_runner_spark.sources.readers import load_table, spread
 
 N_QUERIES = 8  # vec_id < N_QUERIES form the query set
@@ -1812,10 +1814,10 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     size) — the checkpoint leaves a LogicalRDD the audit cannot
     size, hence the tag."""
     cov = embedding_covariance_matrix(spark, sf_dir).select("i", "j", "cov")
-    # Round-13: pin the upper-triangle covariance BEFORE mirroring. The
-    # mirrored union's two branches each re-executed the whole corpus
-    # scan + 2080-struct explode (measured ~5 s x2 at sf0.1); pinned,
-    # the mirror is a lazy 2-leaf union over ONE materialization.
+    # Pin the upper-triangle covariance BEFORE mirroring: unpinned, each
+    # branch of the mirrored union re-executes the corpus scan and
+    # explode; pinned, the mirror is a lazy 2-leaf union over ONE
+    # materialization.
     cov_p = checkpoint_audited(cov)
     full = cov_p.unionAll(
         cov_p.filter(F.col("i") != F.col("j")).select(
@@ -1828,13 +1830,9 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws("-", F.lit("pca-seed"), F.col("id").cast("string"))
         ).alias("x"),
     )
-    # Narrow the 64-row iteration stages to 1 partition for the loop's
-    # duration (the markov_removal_attribution pattern, try/finally-
-    # restored): the corpus-sized work is already pinned in `full`.
-    shuffle_key = "spark.sql.shuffle.partitions"
-    saved_parts = spark.conf.get(shuffle_key)
-    spark.conf.set(shuffle_key, "1")
-    try:
+    # The 64-row iteration stages run at 1 shuffle partition; the
+    # corpus-sized work is already pinned in `full`.
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "1"}):
         for _ in range(PCA_ITERS):
             w = (
                 full.alias("f")
@@ -1842,36 +1840,21 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy(F.col("f.i").alias("i"))
                 .agg(_psum(F.col("f.cov") * F.col("v.x")).alias("w"))
             )
-            # Round-13: checkpoint W (not v) and fuse the norm reduction
-            # onto the checkpoint's own job (graph.py _ckpt_observed
-            # pattern). The old shape ran the mat-vec TWICE per
-            # iteration — once building the norm's broadcast, once
-            # re-materializing w under the v-checkpoint — plus a
-            # crossJoin broadcast job. sum(w²) through exact decimal is
-            # order-insensitive (observe contract); decimal→double and
-            # Math.sqrt are single correctly-rounded IEEE steps in both
-            # the JVM and Python, so nrm is bit-identical to the old
-            # F.sqrt(_psum(...)) column. The step vector v stays a lazy
-            # one-divide projection over the pinned w.
-            # (Per-step pinning itself is load-bearing: without it the
-            # nested broadcast subplans compound — measured 83 s vs
-            # 11.6 s pinned in round 7.)
-            obs = Observation()
-            w_p = checkpoint_audited(
-                w.observe(
-                    obs,
-                    F.sum(
-                        (F.col("w") * F.col("w")).cast("decimal(38,10)")
-                    ).alias("ss"),
-                ),
+            # Pin w (per-step pinning keeps nested broadcast subplans
+            # from compounding) with sum(w²) observed on the pin's own
+            # job: the exact-decimal sum is order-insensitive, and
+            # decimal→double plus sqrt are single correctly-rounded IEEE
+            # steps in the JVM and Python alike, so nrm is bit-identical
+            # to an F.sqrt(_psum(...)) column. v stays a lazy one-divide
+            # projection over the pinned w.
+            w_p, ss = checkpoint_observed(
+                w,
+                F.sum((F.col("w") * F.col("w")).cast("decimal(38,10)")),
                 adjudicated="broadcasts the EMB_DIM-row iteration vector "
                 "(lazy projection over the pinned previous step) into "
                 "the d x d covariance table",
             )
-            nrm = math.sqrt(float(obs.get["ss"]))
-            v = w_p.select("i", (F.col("w") / F.lit(nrm)).alias("x"))
-    finally:
-        spark.conf.set(shuffle_key, saved_parts)
+            v = w_p.select("i", (F.col("w") / F.lit(math.sqrt(float(ss)))).alias("x"))
     wf = (
         full.alias("f")
         .join(F.broadcast(v.alias("v")), F.col("v.i") == F.col("f.j"))

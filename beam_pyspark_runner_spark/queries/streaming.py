@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from beam_pyspark_runner_spark.functions.numeric import dsum, dsum_sql
 from beam_pyspark_runner_spark.queries.events import SESSION_GAP_MINUTES
 from beam_pyspark_runner_spark.queries.registry import register
+from beam_pyspark_runner_spark.session import scoped_conf
 from beam_pyspark_runner_spark.sources.readers import load_table
 from beam_pyspark_runner_spark.streaming.runner import (
     read_parquet_stream,
@@ -2199,9 +2200,7 @@ def stream_stateful_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFr
         # start — size it like streaming/runner.py does for every other
         # stateful stream
         key = "spark.sql.shuffle.partitions"
-        saved = spark.conf.get(key)
-        spark.conf.set(key, str(min(4, int(saved))))
-        try:
+        with scoped_conf(spark, {key: str(min(4, int(spark.conf.get(key))))}):
             query = (
                 agg.writeStream.foreachBatch(sink)
                 .outputMode("append")
@@ -2209,8 +2208,6 @@ def stream_stateful_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFr
                 .trigger(availableNow=True)
                 .start()
             )
-        finally:
-            spark.conf.set(key, saved)
         try:
             if not query.awaitTermination(300):
                 raise TimeoutError("stateful restart stream did not finish in 300s")

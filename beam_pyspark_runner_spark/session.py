@@ -11,6 +11,7 @@ default.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -161,3 +162,24 @@ def drain_listener_bus(spark: SparkSession) -> None:
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     except Exception:
         pass
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set session ``conf`` for the body, then restore every key to its
+    previous value — a key that was unset goes back through
+    ``conf.unset``. The sets run inside the ``try``, so a failure part
+    way through still restores what was already changed. Session conf
+    is global: anything else running on the session meanwhile sees the
+    scoped values too."""
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -18,6 +18,8 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from beam_pyspark_runner_spark.session import scoped_conf
+
 _sink_counter = itertools.count()
 
 
@@ -43,30 +45,20 @@ def run_stream_to_df(
     State-store sizing: a stateful stream instantiates one state-store
     per shuffle partition, and that count is FROZEN into the checkpoint
     at stream start — so it must be sized to key cardinality and
-    throughput, not inherited from the batch default. The local replay
-    harness holds thousands of keys, where 32 store instances' per-batch
-    maintenance dominates wall-clock (measured 3.7 s → 2.1 s at 8 on the
-    tumbling bench; round-13 re-measure: 8 → 4 roughly halves it again —
-    p8 [2.6..3.5] vs p4 [1.5..1.7] — and 2 is no better than 4, so 4 is
-    the local floor where maintenance stops dominating); production
+    throughput, not inherited from the batch default. JVM-stateful
+    streams default to min(4, session width): below that the per-batch
+    store maintenance stops dominating on the local replay harness, and
+    2 is no better than 4. Python-stateful streams
+    (applyInPandasWithState) default WIDER, max(4, defaultParallelism //
+    2): their per-partition cost is the per-key Python protocol (Arrow
+    slice→pandas, GroupState construct, state round-trip), which
+    parallelizes one Python worker per partition until store
+    maintenance overtakes at about half the task slots. Production
     streams set ``spark.graft.stream.partitions`` explicitly (hundreds,
     for millions of keys). Partition count never affects results — only
-    where state lives.
-
-    Python-stateful streams (applyInPandasWithState) get a WIDER default
-    (round-14, guide §4/§2.2): their per-partition cost is dominated not
-    by store maintenance but by the per-key Python protocol (per-key
-    Arrow slice→pandas conversion, GroupState construct, json+pickle
-    state round-trip — pyspark's serializer, ~ms/key), which parallelizes
-    one Python worker per partition. Measured on the session-timeout
-    state stage at sf0.1/local[32], interleaved min-of-4: p4 5.44 s,
-    p8 4.42, p16 3.77, p32 4.48 (maintenance overtakes) — optimum at
-    half the task slots, so the default derives from defaultParallelism
-    rather than a local constant (8-core hosts derive 4, unchanged).
-    JVM-stateful streams keep the maintenance floor of 4."""
+    where state lives."""
     spark = streaming_df.sparkSession
     key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
     target = spark.conf.get("spark.graft.stream.partitions", "")
     if not target:
         try:
@@ -77,12 +69,11 @@ def run_stream_to_df(
         if py_stateful:
             target = str(max(4, spark.sparkContext.defaultParallelism // 2))
         else:
-            target = str(min(4, int(saved)))
+            target = str(min(4, int(spark.conf.get(key))))
     name = f"stream_result_{next(_sink_counter)}"
-    spark.conf.set(key, target)
-    try:
-        # the stream captures the conf at start(); restore right after so
-        # concurrent/subsequent batch plans keep the session default
+    # the stream captures the conf at start(); restore right after so
+    # concurrent/subsequent batch plans keep the session default
+    with scoped_conf(spark, {key: target}):
         query = (
             streaming_df.writeStream.format("memory")
             .queryName(name)
@@ -90,8 +81,6 @@ def run_stream_to_df(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set(key, saved)
     try:
         if not query.awaitTermination(timeout_sec):
             raise TimeoutError(f"streaming query {name} did not finish in {timeout_sec}s")

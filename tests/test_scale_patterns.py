@@ -1300,6 +1300,33 @@ def test_sql_scripting_restores_session_state(spark):
     assert "bprs_script_bands" not in existing
 
 
+def test_sql_scripting_restores_session_state_on_failure(spark, monkeypatch):
+    """sql_scripting_threshold_walk enables scripting and creates its
+    orders temp view before its first pin; a failure at that pin (the
+    first localCheckpoint) must still restore the conf and drop the
+    view."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from beam_pyspark_runner_spark.queries import REGISTRY
+
+    saved = spark.conf.get("spark.sql.scripting.enabled", None)
+    calls = {"n": 0}
+
+    def exploding_lcp(self, *a, **kw):
+        calls["n"] += 1
+        raise RuntimeError("injected pin failure")
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", exploding_lcp)
+    with pytest.raises(RuntimeError, match="injected"):
+        REGISTRY["sql_scripting_threshold_walk"].fn(spark, SF_CORRECT)
+    monkeypatch.undo()
+    assert calls["n"] == 1
+    assert spark.conf.get("spark.sql.scripting.enabled", None) == saved
+    existing = {t.name for t in spark.catalog.listTables()}
+    assert "bprs_script_orders" not in existing
+    assert "bprs_script_bands" not in existing
+
+
 def test_two_phase_quantiles_has_no_global_sort(spark):
     """two_phase_global_quantiles (round-6 verdict #5): the whole point
     is EXACT order statistics without ORDER BY over the corpus. Pin it:
